@@ -300,6 +300,10 @@ object Bench {
     val qs = all
       .map { case (k, t) => s""""$k":${r2(t.med)}""" }
       .mkString("{", ",", "}")
+    // A failed entry (med -1) is listed, never silently summed away: the
+    // total covers the entries that ran, and any failure fails the run.
+    val failedJson = all.collect { case (k, t) if t.med < 0 => s""""$k"""" }
+      .mkString("[", ",", "]")
     val total = all.map(_._2.med).filter(_ >= 0).sum
     scala.util.Try {
       def arr(xs: Seq[Double], f: Double => String): String =
@@ -337,6 +341,7 @@ object Bench {
         (s"""{"unit":"sec","order":["median","min","max"],""" +
           s""""base_reps":$Reps,"settled":$settled,""" +
           s""""sf":"$sfDir","env":$env,"total_median_sec":$total,""" +
+          s""""failed":$failedJson,""" +
           s""""queries":$detail,"rep_wall_sec":$repsJson,""" +
           s""""rep_gc_sec":$gcJson,"rep_cached_mb":$cachedJson,""" +
           s""""rep_load1":$loadJson}""")
@@ -346,7 +351,11 @@ object Bench {
     // per-query medians and the total sit at the END.
     val sfBase = java.nio.file.Paths.get(sfDir).getFileName
     println(
-      s"""{"metric":"total","unit":"sec","detail":"BENCH_DETAIL.json","sf":"$sfBase","queries":$qs,"value":${r2(total)}}""")
+      s"""{"metric":"total","unit":"sec","detail":"BENCH_DETAIL.json","sf":"$sfBase","queries":$qs,"failed":$failedJson,"value":${r2(total)}}""")
     spark.stop()
+    if (failedJson != "[]") {
+      System.err.println(s"[bench] failed entries: $failedJson")
+      sys.exit(1)
+    }
   }
 }

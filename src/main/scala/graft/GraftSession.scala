@@ -3,24 +3,22 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{FloatVectorDot, PolyHash}
+import graft.functions.NativeFunctions
 
-/** Catalyst extension installing graft's native expressions permanently in
-  * every session built with them (`.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`) — no per-call temp
-  * registration needed, and the functions are visible to plain SQL too. */
+/** Catalyst extension installing every graft native function
+  * ([[NativeFunctions.all]]) once in each session built with it
+  * (`.withExtensions(new GraftExtensions)`, which [[GraftSession.builder]]
+  * does, or `spark.sql.extensions=graft.GraftExtensions`). This is the only
+  * place a native function enters a session: DataFrame callers
+  * (`call_function`) and plain SQL resolve the same functions, in derived
+  * sessions (`newSession`, streaming clones) too. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PolyHash(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("float_vector_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "float_vector_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVectorDot(exprs.head, exprs(1))))
+    val owner = NativeFunctions.getClass.getName.stripSuffix("$")
+    NativeFunctions.all.foreach { case (name, builder) =>
+      e.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(owner, name), builder))
+    }
   }
 }
 

@@ -286,7 +286,7 @@ object WordPieceOps {
   def wordPieceFertility(docs: DataFrame, id: Column, text: Column,
       group: Column, vocab: Seq[String]): DataFrame = {
     val toks = graft.functions.WordPieceExpressions
-      .wordPieceEncode(docs.sparkSession, text, vocab)
+      .wordPieceEncode(text, vocab)
     val words = filter(split(text, " "), w => length(w) > 0)
     docs
       .select(group.as("grp"),
@@ -344,7 +344,7 @@ object WordPieceOps {
   def wordPieceTokenizePieces(docs: DataFrame, id: Column, text: Column,
       vocab: Seq[String]): DataFrame = {
     val toks = graft.functions.WordPieceExpressions
-      .wordPieceEncode(docs.sparkSession, text, vocab)
+      .wordPieceEncode(text, vocab)
     docs.select(id.as("doc_id"), toks.as("tokens"),
       size(toks).cast("long").as("n_tokens"),
       size(filter(toks, t => t === Unk)).cast("long").as("n_unk"))

@@ -492,7 +492,6 @@ private[graft] object PipelineShared {
   private[graft] def funnelStages(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[(String, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame)] = {
-    graft.functions.HashExpressions.register(s)
     // r19 measured-and-REVERTED (the r18 SpanDedupOps convention): one
     // fan-out at the funnel's entry was A/B'd at width 32 (~25% SLOWER —
     // the ~69-stage settle chain pays width × stages task schedulings)
@@ -884,9 +883,7 @@ private[graft] object PipelineShared {
 
   /** DuckDB CTE `lbl`: the q60 funnel verdict per doc — the SAME p1–p4
     * fragments as q60's oracle (unfiltered whitespace split, the shared
-    * [[qualityCompositeSql]]), rebuilt over raw `documents`. */
-  private[queries] def funnelLabelCte: String = funnelLabelCteOver("documents")
-
+    * [[qualityCompositeSql]]), rebuilt over raw `table`. */
   private[queries] def funnelLabelCteOver(table: String, p: String = ""): String = {
     val allStopSql = TextOps.LangProfiles.flatMap(_._2).distinct
       .map(w => s"'$w'").mkString("[", ", ", "]")
@@ -1099,7 +1096,6 @@ private[graft] object PipelineShared {
     def weights(s: org.apache.spark.sql.SparkSession, d: String)
         : Seq[Double] =
       cache.getOrElseUpdate(d, {
-        graft.functions.HashExpressions.register(s)
         val train = Tables.documents(s, d).where(pmod(
           graft.functions.HashExpressions.polyHash(col("text")),
           lit(100)) < 80)

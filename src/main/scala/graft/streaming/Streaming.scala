@@ -345,7 +345,6 @@ object Streaming {
       threshold: Double, timeCol: String = "event_time"): DataFrame = {
     import graft.functions.TextHash.bandBucket
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val base = graft.operators.DedupOps.minhashSignaturesLocal(
         docs.withWatermark(timeCol, WatermarkDelay),
         col("doc_id"), col("text"), w,
@@ -399,8 +398,7 @@ object Streaming {
     * restart the stream, the standing static-index rule. */
   def bpeTokenizeStream(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    val toks = graft.operators.BpeOps.bpeTokensCompiled(
-      docs.sparkSession, col("text"), merges)
+    val toks = graft.operators.BpeOps.bpeTokensCompiled(col("text"), merges)
     docs.select(col("doc_id"), toks.as("tokens"),
       size(toks).cast("long").as("n_tokens"))
   }
@@ -416,7 +414,6 @@ object Streaming {
     * static-index rule. */
   def byteBpeTokenizeStream(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.BpeExpressions.register(docs.sparkSession)
     val toks = graft.functions.BpeExpressions.byteBpeEncode(
       col("text"), merges)
     docs.select(col("doc_id"), toks.as("tokens"),
@@ -436,7 +433,6 @@ object Streaming {
       merges: Seq[(String, String)],
       specials: Seq[String] = Nil): DataFrame = {
     require(specials.forall(_.nonEmpty), "specials must be non-empty")
-    graft.functions.BpeExpressions.register(docs.sparkSession)
     val toks = graft.functions.BpeExpressions.gptByteBpe(col("text"),
       merges, specials)
     docs.select(col("doc_id"), toks.as("tokens"),
@@ -843,7 +839,6 @@ object Streaming {
     * graft.operators.SimilarityOps.sq8Quantize]]: (vec_id, codes, mins,
     * scales). */
   def sq8QuantizeStream(emb: DataFrame, stats: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     emb.select(col("vec_id"), col("embedding"), lit(1).as("_k"))
       .join(broadcast(stats.withColumn("_k", lit(1))), "_k")
       .select(col("vec_id"),
@@ -894,7 +889,6 @@ object Streaming {
       m: Int, sub: Int, refitRatio: Double = 1.5,
       timeCol: String = "event_time"): DataFrame = {
     require(refitRatio > 0, s"refitRatio must be positive, got $refitRatio")
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val (_, recon) = graft.operators.PQOps.pqEncodeExprs(
       col("embedding"), codebook, m, sub)
     emb.withWatermark(timeCol, WatermarkDelay)
@@ -942,7 +936,6 @@ object Streaming {
       centroids: DataFrame, stats: DataFrame, threshold: Double,
       timeCol: String = "event_time"): DataFrame = {
     import graft.functions.VectorExpressions
-    VectorExpressions.register(deltaEmb.sparkSession)
     val cents = centroids.select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
     val encoded = deltaEmb.withWatermark(timeCol, WatermarkDelay)
@@ -996,7 +989,6 @@ object Streaming {
       timeCol: String = "event_time"): DataFrame = {
     import graft.functions.VectorExpressions
     import graft.operators.{PQOps, SimilarityOps}
-    VectorExpressions.register(deltaEmb.sparkSession)
     val (codes, _) = PQOps.pqEncodeExprs(col("embedding"), codebook, m, sub)
     val table = typedLit(PQOps.pqCodeDotTable(codebook, m, sub).toSeq)
     val k = codebook.size
@@ -1050,7 +1042,6 @@ object Streaming {
   def leakageSafeSplitStream(deltaDocs: DataFrame, splitIndex: DataFrame,
       w: Int, trainPct: Int = 80, valPct: Int = 10): DataFrame = {
     import graft.functions.TextHash.bandBucket
-    graft.functions.HashExpressions.register(deltaDocs.sparkSession)
     def side(band: Int) = splitIndex.where(col("band") === lit(band))
       .select(col("b").as(s"_b$band"), col("cluster_id").as(s"_c$band"),
         col("grp_hash").as(s"_h$band"), col("n_members").as(s"_n$band"))
@@ -1209,11 +1200,6 @@ object Streaming {
       maxHamming: Int = 6): DataFrame =
     mediaNearDupScreenStream(deltaHashes, corpusHashes, "dhash", maxHamming)
 
-  /** [[mediaNearDupScreenStream]] on [[audioEnvHashStream]] output. */
-  def audioNearDupScreenStream(deltaHashes: DataFrame, corpusHashes: DataFrame,
-      maxHamming: Int = 6): DataFrame =
-    mediaNearDupScreenStream(deltaHashes, corpusHashes, "ehash", maxHamming)
-
   /** Ingest-time VIDEO near-dup detection — the frame-fraction semantics of
     * [[graft.operators.MultimodalOps.videoNearDupPairs]] as a streaming
     * face. Emits one VERDICT row per (delta video, corpus video) whose
@@ -1299,7 +1285,6 @@ object Streaming {
     * and rows finalize in append mode when the watermark passes. */
   def lineDedupStream(docs: DataFrame, dropLines: DataFrame,
       timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     import graft.functions.HashExpressions.polyHash
     val lines = docs.withWatermark(timeCol, WatermarkDelay)
       .select(col(timeCol).as("_t"), col("doc_id"),
@@ -1328,7 +1313,6 @@ object Streaming {
     * the content-hash bucket makes the decision reproducible across
     * engines, retries, and batch/stream faces for the same document. */
   def corpusMixStream(docs: DataFrame, thresholds: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs
       .withColumn("_bkt", graft.functions.TextHash.sampleBucket(
         graft.functions.HashExpressions.polyHash(col("text")), 1000000))
@@ -1491,7 +1475,6 @@ object Streaming {
     * WITHIN one plan (DECISIONS.md), which a micro-batch never does. */
   def decontaminateStream(docs: DataFrame, testH: DataFrame, w: Int,
       minOverlap: Int = 1, timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val sh = docs.withWatermark(timeCol, WatermarkDelay)
       .select(col(timeCol).as("_t"), col("doc_id"),
         explode(array_distinct(graft.functions.HashExpressions
@@ -1525,7 +1508,6 @@ object Streaming {
       centroids: DataFrame, threshold: Double,
       timeCol: String = "event_time"): DataFrame = {
     import graft.functions.VectorExpressions
-    VectorExpressions.register(deltaEmb.sparkSession)
     val cents = centroids.select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
     val assigned = deltaEmb.withWatermark(timeCol, WatermarkDelay)
@@ -1570,7 +1552,6 @@ object Streaming {
   def removeRepeatedSpansStream(docs: DataFrame, dupH: DataFrame, w: Int,
       minSpanTokens: Int, timeCol: String = "event_time"): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val pos = docs.withWatermark(timeCol, WatermarkDelay)
       .select(col(timeCol).as("_t"), col("doc_id"), col("text"),
         posexplode(hashes.shingleHashes(col("text"), w)).as(Seq("_p0", "h")))
@@ -1882,7 +1863,6 @@ object Streaming {
     * static-index rule. */
   def crossDocScreenStream(docs: DataFrame, index: DataFrame, k: Int = 3,
       timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     // gram identity is the composite (h, glen) — must match the frozen
     // index's key exactly: the SAME one-pass GramHashLens kernel
     // SpanDedupOps.gramTable scans with (r14 verdict item 8; the r15
@@ -1964,7 +1944,6 @@ object Streaming {
     * to identical hash sets. */
   def winnowScreenStream(docs: DataFrame, fpIndex: DataFrame,
       minShared: Long = 1L, timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs.withWatermark(timeCol, WatermarkDelay)
       .select(window(col(timeCol), "1 minute").as("window"), col("doc_id"),
         explode(graft.operators.WinnowOps.fingerprintHashes(col("text")))
@@ -2029,7 +2008,6 @@ object Streaming {
     * index, not the stream). */
   def streamDedupStream(docs: DataFrame,
       timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     // the dedup key is (polyHash, xxhash64, length): polyHash alone is
     // mod 1e9+7 (~2^30), where birthday collisions — i.e. FALSE DROPS,
     // unauditable in a physically-dropping face — are expected within a
@@ -2163,7 +2141,6 @@ object Streaming {
   def compressionScreenStream(docs: DataFrame,
       lo: Double = 0.2, hi: Double = 1.1,
       timeCol: String = "event_time"): DataFrame = {
-    graft.functions.CompressExpressions.register(docs.sparkSession)
     val ratio =
       graft.functions.CompressExpressions.deflateRatio(col("text"))
     docs.select(col(timeCol), col("doc_id"),

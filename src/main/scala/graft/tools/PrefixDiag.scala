@@ -18,7 +18,6 @@ object PrefixDiag {
     implicit val spark: org.apache.spark.sql.SparkSession =
       GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    HashExpressions.register(spark)
     val w = 2; val t = 0.9
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).persist()

@@ -127,7 +127,7 @@ class BpeSpec extends SparkSpec {
     val chain = docs.select(col("doc_id"),
       BpeOps.bpeTokensExpr(col("text"), merges).as("tokens"))
     val compiled = docs.select(col("doc_id"),
-      BpeOps.bpeTokensCompiled(spark, col("text"), merges).as("tokens"))
+      BpeOps.bpeTokensCompiled(col("text"), merges).as("tokens"))
     val diff = chain.withColumnRenamed("tokens", "a")
       .join(compiled.withColumnRenamed("tokens", "b"), "doc_id")
       .where(col("a") =!= col("b")).count()
@@ -141,7 +141,7 @@ class BpeSpec extends SparkSpec {
       val a = df.select(BpeOps.bpeTokensExpr(col("text"), merges))
         .head().getSeq[String](0)
       val b = df.select(
-        BpeOps.bpeTokensCompiled(spark, col("text"), merges))
+        BpeOps.bpeTokensCompiled(col("text"), merges))
         .head().getSeq[String](0)
       assert(a == b, s"divergence on '$text' under $merges: $a vs $b")
     }
@@ -428,7 +428,6 @@ class BpeSpec extends SparkSpec {
           w => merges.foldLeft(BpeOps.toByteSymbols(w)) {
             case (s, (l, r)) => BpeOps.mergePair(s, l, r) })))
         .head().getSeq[String](0)
-      BpeExpressions.register(spark)
       val b = df.select(BpeExpressions.byteBpeEncode(col("text"), merges))
         .head().getSeq[String](0)
       assert(a == b, s"byte divergence on '$text': $a vs $b")
@@ -604,7 +603,6 @@ class BpeSpec extends SparkSpec {
     ids.keys.foreach(k =>
       assert(ids(k) == toks(k).map(vocab), s"doc $k id stream"))
     // duplicate vocab entries resolve to the SMALLEST id in the kernel
-    graft.functions.BpeExpressions.register(spark)
     val dup = Seq((1L, Seq("AA"))).toDF("doc_id", "toks")
       .select(graft.functions.BpeExpressions.tokenIds(col("toks"),
         Seq(("AA", 5L), ("AA", 2L))))
