@@ -74,19 +74,6 @@ object AuditOps {
       hashes.polyHash(contentHash(content)).as("snapshot_hash"))
   }
 
-  /** Incremental face of [[snapshotDiff]]: classify an arriving DELTA
-    * against a persisted [[snapshotHashIndex]] without recomputing the
-    * snapshot side — the shape a continuously-rebuilt corpus runs
-    * between full re-indexes (the incrementalDedup convention, for
-    * auditing). Status ∈ added | changed | unchanged; `removed` is
-    * definitionally out of scope — a delta cannot witness absence, that
-    * classification belongs to the full [[snapshotDiff]] at re-index
-    * time. One equi-join on the key: the delta hashes map-side (its
-    * shuffled payload is `(key, 8-byte hash)`), the index side ships
-    * nothing but what it stores. Output
-    * `(key, status, snapshot_hash, delta_hash)` — hash columns kept so a
-    * `changed` verdict is auditable and the post-audit index update is a
-    * projection, not a recompute. */
   /** Apply a CDC changeset to a keyed snapshot — the MERGE INTO /
     * upsert-apply primitive of every table format (Delta/Iceberg-style
     * semantics, stated engine-neutrally): `changes` rows carry
@@ -128,6 +115,21 @@ object AuditOps {
         .select(payload.map(col): _*))
   }
 
+  /** Incremental face of [[snapshotDiff]]: classify an arriving DELTA
+    * against a persisted [[snapshotHashIndex]] without recomputing the
+    * snapshot side — the shape a continuously-rebuilt corpus runs
+    * between full re-indexes (the incrementalDedup convention, for
+    * auditing). Status ∈ added | changed | unchanged; `removed` is
+    * definitionally out of scope — a delta cannot witness absence, that
+    * classification belongs to the full [[snapshotDiff]] at re-index
+    * time. One equi-join on the key: the delta hashes map-side (its
+    * shuffled payload is `(key, 8-byte hash)`), the index side ships
+    * nothing but what it stores. Output
+    * `(key, status, snapshot_hash, delta_hash)` — hash columns kept so a
+    * `changed` verdict is auditable and the post-audit index update is a
+    * projection, not a recompute. On a stream it runs unchanged, as one
+    * stream-static left join (no state, no watermark, append mode):
+    * persist the index first, since every micro-batch re-reads it. */
   def snapshotDeltaAudit(delta: DataFrame, snapshotIndex: DataFrame,
       key: Column, content: Seq[Column], keyName: String = "key"): DataFrame = {
     val hashes = graft.functions.HashExpressions

@@ -21,6 +21,17 @@ import graft.ztbus.Telemetry
   * of 400 s is the streaming analog of the reference's bounded lookback
   * (20 iterations × 20 s, processor/main.py:246-247): later-arriving samples
   * are dropped, matching the reference's hard cap.
+  *
+  * Face rule: a row-local batch operator is its own streaming face. A
+  * stateless projection (tokenizers, Gopher screens, normalization,
+  * blocklists, whitening, chunking, PII redaction, URL canonicalization,
+  * media fingerprints, the snapshot delta audit's stream-static join)
+  * applies to a streaming frame unchanged, so callers run the batch
+  * operator on the stream directly, and StreamingSpec's table-driven
+  * parity suite pins that each one streams like batch. A `…Stream` def
+  * exists here only when the stream needs something the batch operator
+  * does not do: a watermark, keyed state, a timer, or a stream-static
+  * join shape the batch operator does not build.
   */
 object Streaming {
 
@@ -57,27 +68,6 @@ object Streaming {
         lit("simulator").as("origin"),
         map().cast("map<string,string>").as("metadata"))
   }
-
-  /** E3 streaming (stateless subset) — per-minute per-trip metrics over a
-    * telemetry stream: event-time tumbling windows + watermark; one
-    * streaming aggregation, partial aggregation before the shuffle. Append
-    * mode → results finalize when the watermark passes the window end, the
-    * streaming equivalent of the reference emitting results per closed
-    * window. Covers the metrics that need no cross-row order (kwh / dist /
-    * dwell / ratio); [[fullMetricsStream]] is the five-algorithm face. */
-  def minuteMetricsStream(telemetry: DataFrame): DataFrame =
-    telemetry
-      .withWatermark("time", WatermarkDelay)
-      .groupBy(window(col("time"), "1 minute").as("w"), col("trip_id"))
-      .agg(
-        dsum(coalesce(col("electric_power_demand"), lit(0.0)) / 3600.0).as("kwh"),
-        dsum(coalesce(col("odometry_vehicle_speed"), lit(0.0))).as("dist_m"),
-        countIf(col("status_door_is_open") &&
-          col("odometry_vehicle_speed") < 0.1).as("dwell_time_s"),
-        count(lit(1)).as("total_s"))
-      .withColumn("kwh_per_km", guardedRatio(col("kwh"), col("dist_m") / 1000.0))
-      .select(col("w.start").as("minute"), col("trip_id"), col("kwh"),
-        col("dist_m"), col("dwell_time_s"), col("total_s"), col("kwh_per_km"))
 
   /** Per-trip carry state for the streaming diff stage: the previous
     * sample's time/speed/accel, enough to continue the first/second
@@ -483,36 +473,6 @@ object Streaming {
         (-col("_b.ndf")).as("suggestion_df"))
   }
 
-  /** Ingest face of [[graft.operators.UnigramOps.unigramTokenize]] —
-    * the [[bpeTokenizeStream]] contract for the unigram-LM family:
-    * arriving docs Viterbi-segmented under the FROZEN fitted piece
-    * table, baked as data into one row-local compiled expression
-    * ([[graft.functions.UnigramEncode]] — the same expression the batch
-    * face builds, parity definitional), no state, no join. Novel
-    * characters price at the unk floor instead of failing, so the face
-    * never drops an arrival. Re-fit → restart, the standing
-    * static-index rule. */
-  def unigramTokenizeStream(docs: DataFrame,
-      pieces: Seq[(String, Double)]): DataFrame =
-    graft.operators.UnigramOps.unigramTokenize(
-      docs, col("doc_id"), col("text"), pieces)
-
-  /** Ingest face of
-    * [[graft.operators.WordPieceOps.wordPieceTokenizePieces]] — the
-    * [[bpeTokenizeStream]] contract for the WordPiece family: arriving
-    * docs greedy-longest-matched against the FROZEN vocabulary, baked as
-    * data into one row-local compiled expression
-    * ([[graft.functions.WordPieceEncode]] — the same expression the
-    * batch face builds, parity definitional), no state, no join. A word
-    * the vocabulary cannot cover emits `[UNK]` instead of failing, so
-    * the face never drops an arrival; the per-window `n_unk` rate is
-    * the vocabulary-aging signal (rising UNKs → re-fit → restart, the
-    * standing static-index rule). */
-  def wordPieceTokenizeStream(docs: DataFrame,
-      vocab: Seq[String]): DataFrame =
-    graft.operators.WordPieceOps.wordPieceTokenizePieces(
-      docs, col("doc_id"), col("text"), vocab)
-
   /** Ingest face of the learned quality filter
     * ([[graft.operators.ClassifyOps.logisticScore]], q186): arriving
     * docs scored under the FROZEN round-6 IRLS weights — the whole face
@@ -553,58 +513,6 @@ object Streaming {
     graft.operators.TextOps.noiseDraws(
       docs.select(col("doc_id"), col("text").as("_text")),
       broadcast(noise), k, buckets)
-
-  /** Ingest face of [[graft.operators.TextOps.gopherRepetition]] — the
-    * Gopher repetition rules ARE an ingest-time screen (every signal is
-    * document-local), so the stream body is literally the batch
-    * operator: one codegen'd kernel per arriving row, no state, no
-    * join, parity definitional. */
-  def gopherRepetitionStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.gopherRepetition(docs, col("doc_id"), col("text"))
-
-  /** Ingest face of [[graft.operators.TextOps.gopherQuality]] — the
-    * non-repetition Gopher half, equally document-local: row-local HOF
-    * columns, no state, no join, parity definitional. */
-  def gopherQualityStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.gopherQuality(docs, col("doc_id"), col("text"))
-
-  /** Ingest face of [[graft.operators.TextOps.normalizeText]] —
-    * normalization is the FIRST ingest stage (every downstream screen
-    * fingerprints the normal form); row-local string expressions, no
-    * state, parity definitional. */
-  def normalizeTextStream(docs: DataFrame,
-      keepText: Boolean = false): DataFrame =
-    graft.operators.TextOps.normalizeText(docs, col("doc_id"), col("text"),
-      keepText)
-
-  /** Ingest faces of [[graft.operators.TextOps.blocklistScreen]] /
-    * [[graft.operators.TextOps.blocklistRedact]] — the frozen phrase
-    * list is baked into the automaton at stream definition (the
-    * BpeEncode convention; list update ⇒ restart the stream, the
-    * standing static-index rule); one walk per arriving row, no state,
-    * parity definitional. */
-  def blocklistScreenStream(docs: DataFrame,
-      patterns: Seq[String]): DataFrame =
-    graft.operators.TextOps.blocklistScreen(docs, col("doc_id"),
-      col("text"), patterns)
-
-  def blocklistRedactStream(docs: DataFrame, patterns: Seq[String],
-      marker: String = "<BLOCKED>", keepText: Boolean = false): DataFrame =
-    graft.operators.TextOps.blocklistRedact(docs, col("doc_id"),
-      col("text"), patterns, marker, keepText)
-
-  /** Ingest face of [[graft.operators.WhitenOps.whiten]] — arriving
-    * vectors projected through the FROZEN fitted ZCA model (moments are
-    * corpus-wide statistics a micro-batch cannot know; re-fit ⇒ restart
-    * the stream, the standing static-index rule — with
-    * [[quantizationDriftStream]]'s drift-detector pattern as the re-fit
-    * trigger). The model is baked into one compiled row-local
-    * expression at stream definition, so the plan is three nodes and
-    * parity with the batch apply is definitional. */
-  def whitenStream(emb: DataFrame,
-      model: graft.operators.WhitenOps.ZcaModel): DataFrame =
-    graft.operators.WhitenOps.whiten(emb, col("vec_id"), col("embedding"),
-      model)
 
   /** Ingest face of [[graft.operators.AuditOps.applyChangeSet]] — a CDC
     * change stream continuously materialized into a keyed snapshot (the
@@ -1072,70 +980,14 @@ object Streaming {
           .otherwise("test").as("split"))
   }
 
-  /** Streaming face of [[graft.operators.AuditOps.snapshotDeltaAudit]] —
-    * ingest-time change classification: every arriving keyed row is
-    * stamped added | changed | unchanged against the persisted
-    * [[graft.operators.AuditOps.snapshotHashIndex]] the moment it lands,
-    * instead of waiting for the next full two-sided
-    * [[graft.operators.AuditOps.snapshotDiff]]. The delta's hash is
-    * row-local and the classification is ONE stream-static left join on
-    * the key — no state, no watermark, append mode (the
-    * [[incrementalDedupStream]] shape); `removed` stays the full diff's
-    * job, a delta cannot witness absence.
-    *
-    * PERSIST the index before starting the stream (it is the static join
-    * side every micro-batch re-reads — the [[mediaNearDupScreenStream]]
-    * lesson); rebuild it at corpus re-index time like every ingest-time
-    * screen here. Batch parity is definitional: the body IS the batch
-    * operator applied to the streaming frame, so the face and
-    * [[graft.operators.AuditOps.snapshotDeltaAudit]] cannot drift
-    * (StreamingSpec pins it row-for-row anyway, plus checkpoint
-    * recovery). */
-  def snapshotDeltaAuditStream(delta: DataFrame, snapshotIndex: DataFrame,
-      key: Column, content: Seq[Column],
-      keyName: String = "key"): DataFrame =
-    graft.operators.AuditOps.snapshotDeltaAudit(
-      delta, snapshotIndex, key, content, keyName)
-
-  /** Streaming faces of the row-local curation transforms
-    * ([[graft.operators.TextOps.chunkDocs]] /
-    * [[graft.operators.TextOps.piiRedact]]): both are stateless
-    * projections, so the BATCH definition applies to a streaming
-    * `(doc_id, text)` frame unchanged — one Column definition shared by
-    * construction (the funnel's `funnelPredicates` discipline, taken to
-    * its limit: there is no second definition to drift). The delegates
-    * make the streaming surface explicit and give StreamingSpec a stable
-    * name to pin parity on. No state, no watermark; legal in append mode
-    * under any sink. */
-  def chunkDocsStream(docs: DataFrame, chunkWords: Int, stride: Int): DataFrame =
-    graft.operators.TextOps.chunkDocs(
-      docs, col("doc_id"), col("text"), chunkWords, stride)
-
-  def piiRedactStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.piiRedact(docs, col("doc_id"), col("text"))
-
-  /** Streaming faces of the multimodal fingerprint ops
-    * ([[graft.operators.MultimodalOps.imageDHash]] /
-    * [[graft.operators.MultimodalOps.audioEnvHash]]): both are stateless
-    * per-row decodes, so the batch definition applies to a streaming
-    * media Dataset unchanged (the chunk/redact delegate discipline) —
-    * ingest-time fingerprinting; pair discovery against the corpus hash
-    * index stays a downstream stream-static join. */
-  def imageDHashStream(media: Dataset[graft.operators.MultimodalOps.MediaRow])(
-      implicit spark: SparkSession): Dataset[graft.operators.MultimodalOps.ImageHash] =
-    graft.operators.MultimodalOps.imageDHash(media)
-
-  def audioEnvHashStream(media: Dataset[graft.operators.MultimodalOps.MediaRow])(
-      implicit spark: SparkSession): Dataset[graft.operators.MultimodalOps.AudioHash] =
-    graft.operators.MultimodalOps.audioEnvHash(media)
-
   /** Ingest-time media near-dup SCREEN over a 64-bit fingerprint column —
     * the [[incrementalDedupStream]] shape extended to the image/audio
     * modality: each micro-batch of freshly-fingerprinted media
-    * ([[imageDHashStream]] / [[audioEnvHashStream]]) is screened against
-    * the EXISTING corpus's fingerprints, and survivors are the rows to
-    * append. A delta row is dropped iff some corpus fingerprint is within
-    * hamming `maxHamming` of it.
+    * ([[graft.operators.MultimodalOps.imageDHash]] /
+    * [[graft.operators.MultimodalOps.audioEnvHash]] run on the stream) is
+    * screened against the EXISTING corpus's fingerprints, and survivors
+    * are the rows to append. A delta row is dropped iff some corpus
+    * fingerprint is within hamming `maxHamming` of it.
     *
     * Exact recall WITHOUT band-bucket trust: the text screen can drop on
     * bucket collision because minhash band equality IS the candidate
@@ -1194,11 +1046,6 @@ object Streaming {
     }
     screened.unionByName(deltaHashes.where(!col("ok")))
   }
-
-  /** [[mediaNearDupScreenStream]] on [[imageDHashStream]] output. */
-  def imageNearDupScreenStream(deltaHashes: DataFrame, corpusHashes: DataFrame,
-      maxHamming: Int = 6): DataFrame =
-    mediaNearDupScreenStream(deltaHashes, corpusHashes, "dhash", maxHamming)
 
   /** Ingest-time VIDEO near-dup detection — the frame-fraction semantics of
     * [[graft.operators.MultimodalOps.videoNearDupPairs]] as a streaming
@@ -1787,7 +1634,10 @@ object Streaming {
     * run of `flag == true`; it is emitted when a false sample arrives after
     * an open run, or when the event-time timeout (400 s past the last
     * sample) fires — so runs straddling micro-batch boundaries survive in
-    * state instead of needing the reference's lookback loop. */
+    * state instead of needing the reference's lookback loop. A late
+    * in-watermark sample follows [[sessionStatsStream]]'s rule: a flagged
+    * one widens the open run, a false one older than the run's last
+    * sample is ignored. */
   def sessionize(samples: Dataset[FlagSample])(
       implicit spark: SparkSession): Dataset[SessionOut] = {
     import spark.implicits._
@@ -2025,16 +1875,6 @@ object Streaming {
         "content_len")
   }
 
-  /** Ingest face of [[graft.operators.UrlOps.canonicalize]] — URL
-    * normalization on arrivals is pure row-local regexp/HOF column
-    * arithmetic, so the face is a stateless select; the per-domain
-    * rollup ([[graft.operators.UrlOps.domainStats]]) stays a batch/
-    * foreachBatch concern like every other corpus-wide statistic. */
-  def urlCanonStream(docs: DataFrame,
-      timeCol: String = "event_time"): DataFrame =
-    graft.operators.UrlOps.canonicalize(
-      docs, col("doc_id"), col("url"), keep = Seq(timeCol))
-
   /** One canonicalized arrival for [[urlDedupStream]]. */
   final case class UrlDocIn(doc_id: Long, url_canon: String,
       domain: String, event_time: Timestamp)
@@ -2052,8 +1892,9 @@ object Streaming {
 
   /** Within-stream exact-URL dedup — the ingest twin of the q181 batch
     * semantics ([[graft.operators.UrlOps.urlDedup]]), composed over
-    * [[urlCanonStream]]: arrivals dedup against each other on the FULL
-    * canonical-URL string (exact key, no hash-collision false drops).
+    * [[graft.operators.UrlOps.canonicalize]]: arrivals dedup against
+    * each other on the FULL canonical-URL string (exact key, no
+    * hash-collision false drops).
     * Crawl frontiers refetch the same resource in bursts —
     * tracking-param variants, fragments, case — so the stage-zero drop
     * point is the ingest edge.
@@ -2076,7 +1917,8 @@ object Streaming {
       timeCol: String = "event_time"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    urlCanonStream(docs, timeCol)
+    graft.operators.UrlOps.canonicalize(
+        docs, col("doc_id"), col("url"), keep = Seq(timeCol))
       .select(col("doc_id").cast("long").as("doc_id"), col("url_canon"),
         col("domain"), col(timeCol).cast("timestamp").as("event_time"))
       .withWatermark("event_time", WatermarkDelay)
@@ -2195,11 +2037,17 @@ object Streaming {
     sorted.foreach { s =>
       val t = s.time.getTime
       (open, s.flag) match {
-        case (Some(r), true) => open = Some(RunState(r.startMs, t, r.n + 1))
-        case (Some(r), false) =>
+        case (Some(r), true) =>
+          // late in-watermark flagged samples widen the run bounds, never
+          // regress them — the SessionStatsProcessor rule, so both
+          // session machines emit the same bounds
+          open = Some(RunState(math.min(r.startMs, t),
+            math.max(r.lastMs, t), r.n + 1))
+        case (Some(r), false) if t >= r.lastMs =>
           emitted += SessionOut(tripId, new Timestamp(r.startMs),
             new Timestamp(r.lastMs), r.n)
           open = None
+        case (Some(_), false) => () // late false inside the open run
         case (None, true) => open = Some(RunState(t, t, 1))
         case (None, false) => ()
       }

@@ -5,8 +5,9 @@ import graft.ztbus.Fixtures
 
 /** End-to-end streaming run over the ZTBus fixture: feeds telemetry through
   * an in-memory stream in minute-sized micro-batches (simulating the
-  * replay clock) into both streaming queries — the windowed metric
-  * aggregation and the stateful sessionizer — and prints what each emits. */
+  * replay clock) into both streaming queries — the five-algorithm metric
+  * aggregation (with the trips join) and the stateful sessionizer — and
+  * prints what each emits. */
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.builder("local[4]", 4).getOrCreate()
@@ -16,9 +17,11 @@ object StreamingDemo {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val telemetry = Fixtures.telemetry()
+    val trips = Fixtures.trips.toDF()
 
     val metricsIn = MemoryStream[graft.ztbus.Telemetry]
-    val metricsQ = Streaming.minuteMetricsStream(metricsIn.toDF()).writeStream
+    val metricsQ = Streaming.fullMetricsStream(metricsIn.toDS(), Some(trips))
+      .writeStream
       .outputMode("append").format("memory").queryName("metrics").start()
 
     val sessIn = MemoryStream[Streaming.FlagSample]

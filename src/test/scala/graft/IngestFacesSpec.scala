@@ -357,23 +357,6 @@ class IngestFacesSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("urlCanonStream canonicalizes arrivals statelessly") {
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val q = Streaming.urlCanonStream(
-      in.toDS().toDF("doc_id", "url", "event_time"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("url1").start()
-    try {
-      in.addData((1L, "https://CDN.s.co.uk:443/p?utm_source=a&id=3#f", ts(T0)))
-      q.processAllAvailable()
-      val r = spark.table("url1").collect().head
-      assert(r.getAs[String]("url_canon") === "https://cdn.s.co.uk/p?id=3")
-      assert(r.getAs[String]("domain") === "s.co.uk")
-      assert(r.getAs[Long]("n_params_dropped") === 1L)
-      assert(r.getAs[Timestamp]("event_time") === ts(T0))
-    } finally q.stop()
-  }
-
   test("streamDedupStream collapses in-stream exact copies to one survivor") {
     val in = MemoryStream[(Long, String, Timestamp)]
     val q = Streaming.streamDedupStream(

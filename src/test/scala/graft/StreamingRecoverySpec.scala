@@ -248,7 +248,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-snap-out").toString
     val in = MemoryStream[(Long, String, String)]
 
-    def start() = Streaming.snapshotDeltaAuditStream(
+    def start() = AuditOps.snapshotDeltaAudit(
         in.toDS().toDF("doc_id", "text", "source"), index,
         col("doc_id"), Seq(col("text"), col("source")), keyName = "doc_id")
       .writeStream.outputMode("append").format("parquet")

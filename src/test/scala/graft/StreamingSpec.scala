@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.Streaming
@@ -508,74 +509,6 @@ class StreamingSpec extends SparkSpec {
     } finally { q.stop(); idx.unpersist(blocking = false) }
   }
 
-  test("snapshotDeltaAuditStream classifies arrivals like the batch face") {
-    import graft.operators.AuditOps
-    val snapshot = Seq(
-      (1L, "alpha", "web"), (2L, "beta", "web"),
-      (3L, "gamma", "book")).toDF("doc_id", "text", "source")
-    val index = AuditOps.snapshotHashIndex(snapshot, col("doc_id"),
-      Seq(col("text"), col("source")), keyName = "doc_id").persist()
-    val b1 = Seq(
-      (1L, "alpha", "web"),          // unchanged
-      (2L, "beta EDITED", "web"))    // changed
-    val b2 = Seq(
-      (3L, "gamma", "web"),          // changed (source moved)
-      (9L, "epsilon", "web"))        // added
-    val in = MemoryStream[(Long, String, String)]
-    val q = Streaming.snapshotDeltaAuditStream(
-      in.toDS().toDF("doc_id", "text", "source"), index,
-      col("doc_id"), Seq(col("text"), col("source")), keyName = "doc_id")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("snapaudit1").start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      def keyed(rs: Array[org.apache.spark.sql.Row]) =
-        rs.map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      val streamed = keyed(spark.table("snapaudit1").collect())
-      val batch = keyed(AuditOps.snapshotDeltaAudit(
-        (b1 ++ b2).toDF("doc_id", "text", "source"), index,
-        col("doc_id"), Seq(col("text"), col("source")),
-        keyName = "doc_id").collect())
-      assert(batch(1L).head == "unchanged" && batch(2L).head == "changed" &&
-        batch(3L).head == "changed" && batch(9L).head == "added",
-        s"batch fixture sanity: $batch")
-      assert(streamed == batch,
-        "streamed verdicts and hashes must equal the batch face row-for-row")
-    } finally { q.stop(); index.unpersist(blocking = false) }
-  }
-
-  test("chunkDocsStream and piiRedactStream match their batch faces") {
-    import graft.operators.TextOps
-    val b1 = Seq(
-      (1L, (1 to 11).map(i => s"w$i").mkString(" ")),  // 3 chunks at 5/4
-      (2L, "mail me at a.b@example.com or https://x.example/y"))
-    val b2 = Seq(
-      (3L, "short doc"),                               // single short chunk
-      (4L, "call 555-123-4567 twice 555-123-4567"))
-    val all = (b1 ++ b2).toDF("doc_id", "text")
-    val in = MemoryStream[(Long, String)]
-    val src = in.toDS().toDF("doc_id", "text")
-    val qc = Streaming.chunkDocsStream(src, 5, 4)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("chunks1").start()
-    val qr = Streaming.piiRedactStream(src)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("redact1").start()
-    try {
-      in.addData(b1: _*); qc.processAllAvailable(); qr.processAllAvailable()
-      in.addData(b2: _*); qc.processAllAvailable(); qr.processAllAvailable()
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq).toSet
-      assert(rows(spark.table("chunks1")) ==
-        rows(TextOps.chunkDocs(all, col("doc_id"), col("text"), 5, 4)))
-      assert(rows(spark.table("chunks1")).size == 3 + 2 + 1 + 1,
-        "11w -> 3 chunks, 7w -> 2, 2w -> 1, 4w -> 1 at chunk 5 / stride 4")
-      assert(rows(spark.table("redact1")) ==
-        rows(TextOps.piiRedact(all, col("doc_id"), col("text"))))
-    } finally { qc.stop(); qr.stop() }
-  }
-
   test("temperatureMixStream equals batch temperatureMix row-for-row") {
     import graft.operators.TextOps
     val d = ((0 until 40).map(i => (i.toLong, s"big source doc $i", "big")) ++
@@ -818,73 +751,6 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("unigramTokenizeStream rows equal the batch tokenizer; novel chars price as unk") {
-    import graft.operators.UnigramOps
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val pieces = UnigramOps.unigramFit(docs, col("text"),
-      vocabSize = 120, seedSize = 240, emIters = 1)
-      .collect().map(r => (r.getString(0), r.getDouble(2))).toSeq
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.unigramTokenizeStream(
-      in.toDS().toDF("doc_id", "text"), pieces)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ug1").start()
-    try {
-      in.addData(rows.take(30).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(30).toIndexedSeq: _*); q.processAllAvailable()
-      // a doc in a script the fit never saw: segments (unk floor), no drop
-      in.addData((9999L, "щось цілком нове")); q.processAllAvailable()
-      val streamed = spark.table("ug1").collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-      val batch = UnigramOps.unigramTokenize(docs, col("doc_id"),
-        col("text"), pieces).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-      assert(streamed.filterNot(_._1 == 9999L) == batch,
-        "ingest-time rows must equal the batch tokenizer exactly")
-      val novel = streamed(9999L)
-      assert(novel._1 == 14L, s"all-novel doc chars as pieces: $novel")
-      assert(novel._3 < -300.0, "every novel char priced at the unk floor")
-    } finally q.stop()
-  }
-
-  test("wordPieceTokenizeStream rows equal the batch tokenizer; unseen chars go [UNK]") {
-    import graft.operators.{BpeOps, WordPieceOps}
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val freqs = BpeOps.wordFreqs(docs, col("text"))
-    val vocab = WordPieceOps.wpVocab(
-        freqs, WordPieceOps.wpLearn(freqs, 8))
-      .orderBy("piece").collect().map(_.getString(0)).toSeq
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.wordPieceTokenizeStream(
-      in.toDS().toDF("doc_id", "text"), vocab)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("wp1").start()
-    try {
-      in.addData(rows.take(30).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(30).toIndexedSeq: _*); q.processAllAvailable()
-      // a doc in a script the fit never saw: whole words go [UNK], no drop
-      in.addData((9999L, "щось нове")); q.processAllAvailable()
-      val streamed = spark.table("wp1").collect()
-        .map(r => r.getLong(0) ->
-          ((r.getSeq[String](1), r.getLong(2), r.getLong(3)))).toMap
-      val batch = WordPieceOps.wordPieceTokenizePieces(docs, col("doc_id"),
-        col("text"), vocab).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getSeq[String](1), r.getLong(2), r.getLong(3)))).toMap
-      assert(streamed.filterNot(_._1 == 9999L) == batch,
-        "ingest-time rows must equal the batch tokenizer exactly")
-      assert(streamed(9999L)._1 == Seq(WordPieceOps.Unk, WordPieceOps.Unk),
-        "novel-script words collapse to whole-word [UNK], never a drop")
-      assert(streamed(9999L)._3 == 2L)
-    } finally q.stop()
-  }
-
   test("logisticScoreStream probabilities equal the batch scorer row-for-row") {
     import graft.operators.{ClassifyOps, TextOps}
     val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 80)
@@ -942,118 +808,6 @@ class StreamingSpec extends SparkSpec {
         (1L, "tble") -> (("table", 1L, 10L)),
         (2L, "aable") -> (("table", 1L, 10L))), s"$got")
     } finally q.stop()
-  }
-
-  test("gopherRepetitionStream verdicts equal the batch screen row-for-row") {
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.gopherRepetitionStream(in.toDS().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gopher1").start()
-    try {
-      in.addData(rows.take(30).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(30).toIndexedSeq: _*); q.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        r.getLong(0) -> r.getValuesMap[Any](r.schema.fieldNames.drop(1).toSeq)
-      val streamed = spark.table("gopher1").collect().map(key).toMap
-      val batch = graft.operators.TextOps.gopherRepetition(
-        docs, col("doc_id"), col("text")).collect().map(key).toMap
-      assert(streamed == batch,
-        "ingest-time repetition verdicts must equal the batch screen exactly")
-    } finally q.stop()
-  }
-
-  test("gopherQualityStream verdicts equal the batch screen row-for-row") {
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.gopherQualityStream(in.toDS().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gopherq1").start()
-    try {
-      in.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        r.getLong(0) -> r.getValuesMap[Any](r.schema.fieldNames.drop(1).toSeq)
-      val streamed = spark.table("gopherq1").collect().map(key).toMap
-      val batch = graft.operators.TextOps.gopherQuality(
-        docs, col("doc_id"), col("text")).collect().map(key).toMap
-      assert(streamed == batch,
-        "ingest-time quality verdicts must equal the batch screen exactly")
-    } finally q.stop()
-  }
-
-  test("normalizeTextStream and whitenStream equal their batch faces") {
-    // normalize: stateless string chain
-    val docs = Seq((1L, "  A\tB  "), (2L, "ok"), (3L, ""))
-      .toDF("doc_id", "text")
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.normalizeTextStream(
-      in.toDS().toDF("doc_id", "text"), keepText = true)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("norm1").start()
-    try {
-      in.addData((1L, "  A\tB  "), (2L, "ok"), (3L, "")); q.processAllAvailable()
-      val streamed = spark.table("norm1").collect()
-        .map(r => r.getLong(0) -> r.getAs[String]("norm_text")).toMap
-      val batch = graft.operators.TextOps.normalizeText(
-        docs, col("doc_id"), col("text"), keepText = true).collect()
-        .map(r => r.getLong(0) -> r.getAs[String]("norm_text")).toMap
-      assert(streamed == batch && streamed(1L) == "a b")
-    } finally q.stop()
-    // whiten: frozen fitted model applied to arrivals
-    import graft.operators.WhitenOps
-    val emb = graft.Tables.embeddings(spark, sf).where(col("vec_id") < 60)
-      .select("vec_id", "embedding").cache()
-    val model = WhitenOps.fitZca(
-      WhitenOps.moments(emb, col("embedding"), 64), 64)
-    val rows = emb.collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val in2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = Streaming.whitenStream(
-      in2.toDS().toDF("vec_id", "embedding"), model)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("whiten1").start()
-    try {
-      in2.addData(rows.toIndexedSeq: _*); q2.processAllAvailable()
-      val streamed = spark.table("whiten1").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      val batch = WhitenOps.whiten(emb, col("vec_id"), col("embedding"),
-        model).collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      assert(streamed == batch,
-        "ingest-time whitening must equal the batch apply exactly")
-    } finally q2.stop()
-  }
-
-  test("blocklist screen and redact streams equal their batch faces") {
-    val pats = Seq("slow", "fast table", "agg")
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.blocklistScreenStream(
-      in.toDS().toDF("doc_id", "text"), pats)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("block1").start()
-    val in2 = MemoryStream[(Long, String)]
-    val q2 = Streaming.blocklistRedactStream(
-      in2.toDS().toDF("doc_id", "text"), pats)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("block2").start()
-    try {
-      in.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
-      in2.addData(rows.toIndexedSeq: _*); q2.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        r.getLong(0) -> r.getValuesMap[Any](r.schema.fieldNames.drop(1).toSeq)
-      assert(spark.table("block1").collect().map(key).toMap ==
-        graft.operators.TextOps.blocklistScreen(docs, col("doc_id"),
-          col("text"), pats).collect().map(key).toMap)
-      assert(spark.table("block2").collect().map(key).toMap ==
-        graft.operators.TextOps.blocklistRedact(docs, col("doc_id"),
-          col("text"), pats).collect().map(key).toMap)
-    } finally { q.stop(); q2.stop() }
   }
 
   test("cdcApplySink materializes the change log to the one-shot MERGE state") {
@@ -1404,8 +1158,8 @@ class StreamingSpec extends SparkSpec {
                                               // broken corpus row indexed
       (15L, false, 0L))                       // broken delta: passes through
     val in = MemoryStream[(Long, Boolean, Long)]
-    val q = Streaming.imageNearDupScreenStream(
-      in.toDS().toDF("media_id", "ok", "dhash"), corpus)
+    val q = Streaming.mediaNearDupScreenStream(
+      in.toDS().toDF("media_id", "ok", "dhash"), corpus, "dhash")
       .writeStream.outputMode("append").format("memory")
       .queryName("mediascreen1").start()
     try {
@@ -1808,10 +1562,11 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("minuteMetricsStream finalizes windows past the watermark") {
+  test("fullMetricsStream finalizes windows past the watermark") {
     implicit val s = spark
     val in = MemoryStream[graft.ztbus.Telemetry]
-    val q = Streaming.minuteMetricsStream(in.toDF()).writeStream
+    val q = Streaming.fullMetricsStream(in.toDS(),
+        Some(graft.ztbus.Fixtures.trips.toDF())).writeStream
       .outputMode("append").format("memory").queryName("mm").start()
     try {
       in.addData(graft.ztbus.Fixtures.telemetry())
@@ -1872,5 +1627,204 @@ class StreamingSpec extends SparkSpec {
         .select("word").as[String].collect().toSet
       assert(got.filter(_._1 == 4L).forall(r => vocab(r._3)))
     } finally { q.stop(); noise.unpersist() }
+  }
+
+  test("sessionize: late flagged sample widens the open run like batch and sessionStatsStream") {
+    implicit val s = spark
+    val base = "2021-03-09 14:15:00"
+    def t(id: Long, secs: Int, flag: Boolean) =
+      graft.ztbus.Fixtures.telemetry().head.copy(
+        id = id, trip_id = 5L, time = sec(base, secs),
+        status_halt_brake_is_active = flag)
+    // flagged +0 and +10; next micro-batch: late flagged +5, then false +20
+    val b1 = Seq(t(0L, 0, flag = true), t(10L, 10, flag = true))
+    val b2 = Seq(t(5L, 5, flag = true), t(20L, 20, flag = false))
+    val batch = graft.ztbus.Algorithms.brakeSessions(
+        (b1 ++ b2).toDF(), "status_halt_brake_is_active")
+      .as[(Long, Timestamp, Timestamp, Long)].collect().toSet
+    assert(batch == Set((5L, sec(base, 0), sec(base, 10), 3L)),
+      s"batch fixture sanity: $batch")
+    val flags = MemoryStream[FlagSample]
+    val stats = MemoryStream[graft.ztbus.Telemetry]
+    val qs = Streaming.sessionize(flags.toDS()).writeStream
+      .outputMode("append").format("memory").queryName("sesslate").start()
+    val qt = Streaming.sessionStatsStream(stats.toDS(),
+        "status_halt_brake_is_active").writeStream
+      .outputMode("append").format("memory").queryName("sesslatestats").start()
+    try {
+      Seq(b1, b2).foreach { b =>
+        flags.addData(b.map(x =>
+          FlagSample(x.trip_id, x.time, x.status_halt_brake_is_active)))
+        stats.addData(b)
+        qs.processAllAvailable(); qt.processAllAvailable()
+      }
+      val sessionized = spark.table("sesslate").as[SessionOut].collect()
+        .map(r => (r.trip_id, r.time_from, r.time_to, r.n_samples)).toSet
+      val statRuns = spark.table("sesslatestats")
+        .select("trip_id", "time_from", "time_to", "n_samples")
+        .as[(Long, Timestamp, Timestamp, Long)].collect().toSet
+      assert(sessionized == batch,
+        s"late sample must widen, not regress, the run: $sessionized vs $batch")
+      assert(sessionized == statRuns,
+        s"both session machines must agree: $sessionized vs $statRuns")
+    } finally { qs.stop(); qt.stop() }
+  }
+
+  /** One row of the row-local parity table: a batch operator that must
+    * stream exactly like batch when run on a streaming frame (the
+    * `Streaming` face rule), plus an optional check on the streamed rows. */
+  private case class RowLocal(name: String, input: () => DataFrame,
+      op: DataFrame => DataFrame, check: Array[Row] => Unit = _ => ())
+
+  private lazy val textDocs = graft.Tables.documents(spark, sf)
+    .where(col("doc_id") < 60).select("doc_id", "text").cache()
+  private def withNovel(text: String) =
+    textDocs.union(Seq((9999L, text)).toDF("doc_id", "text"))
+  private lazy val unigramPieces = graft.operators.UnigramOps.unigramFit(
+      textDocs, col("text"), vocabSize = 120, seedSize = 240, emIters = 1)
+    .collect().map(r => (r.getString(0), r.getDouble(2))).toSeq
+  private lazy val wpVocab = {
+    import graft.operators.{BpeOps, WordPieceOps}
+    val freqs = BpeOps.wordFreqs(textDocs, col("text"))
+    WordPieceOps.wpVocab(freqs, WordPieceOps.wpLearn(freqs, 8))
+      .orderBy("piece").collect().map(_.getString(0)).toSeq
+  }
+  private lazy val embeddings = graft.Tables.embeddings(spark, sf)
+    .where(col("vec_id") < 60).select("vec_id", "embedding").cache()
+  private lazy val zca = graft.operators.WhitenOps.fitZca(
+    graft.operators.WhitenOps.moments(embeddings, col("embedding"), 64), 64)
+  private lazy val snapIndex = graft.operators.AuditOps.snapshotHashIndex(
+    Seq((1L, "alpha", "web"), (2L, "beta", "web"), (3L, "gamma", "book"))
+      .toDF("doc_id", "text", "source"),
+    col("doc_id"), Seq(col("text"), col("source")), keyName = "doc_id")
+  private lazy val mediaDocs = Seq(0L, 1L, 2L, 3L, 4L, 7L, 8L, 12L, 16L)
+    .map(i => (i, s"doc $i body " + (0 until 30).map(j => s"w${i}_$j").mkString(" ")))
+    .toDF("doc_id", "text")
+  private val chunkInput = () => Seq(
+      (1L, (1 to 11).map(i => s"w$i").mkString(" ")),  // 3 chunks at 5/4
+      (2L, "mail me at a.b@example.com or https://x.example/y"),
+      (3L, "short doc"),                               // single short chunk
+      (4L, "call 555-123-4567 twice 555-123-4567"))
+    .toDF("doc_id", "text")
+  private val blocklist = Seq("slow", "fast table", "agg")
+  private def byId(rs: Array[Row], key: String = "doc_id") =
+    rs.map(r => r.getAs[Long](key) -> r).toMap
+
+  private val rowLocalOps: Seq[RowLocal] = {
+    import graft.operators.{AuditOps, MultimodalOps, TextOps, UnigramOps,
+      UrlOps, WhitenOps, WordPieceOps}
+    import MultimodalOps.{MediaRow, VariantIdOffset => off}
+    val (id, text) = (col("doc_id"), col("text"))
+    Seq(
+      RowLocal("AuditOps.snapshotDeltaAudit",
+        () => Seq(
+          (1L, "alpha", "web"),          // unchanged
+          (2L, "beta EDITED", "web"),    // changed
+          (3L, "gamma", "web"),          // changed (source moved)
+          (9L, "epsilon", "web"))        // added
+          .toDF("doc_id", "text", "source"),
+        AuditOps.snapshotDeltaAudit(_, snapIndex, id,
+          Seq(text, col("source")), keyName = "doc_id"),
+        rs => assert(byId(rs).view.mapValues(_.getString(1)).toMap == Map(
+          1L -> "unchanged", 2L -> "changed", 3L -> "changed", 9L -> "added"))),
+      RowLocal("TextOps.chunkDocs", chunkInput,
+        TextOps.chunkDocs(_, id, text, 5, 4),
+        rs => assert(rs.length == 3 + 2 + 1 + 1,
+          "11w -> 3 chunks, 7w -> 2, 2w -> 1, 4w -> 1 at chunk 5 / stride 4")),
+      RowLocal("TextOps.piiRedact", chunkInput, TextOps.piiRedact(_, id, text)),
+      RowLocal("UnigramOps.unigramTokenize",
+        // a doc in a script the fit never saw: segments (unk floor), no drop
+        () => withNovel("щось цілком нове"),
+        UnigramOps.unigramTokenize(_, id, text, unigramPieces),
+        rs => {
+          val novel = byId(rs)(9999L)
+          assert(novel.getLong(1) == 14L, s"all-novel doc chars as pieces: $novel")
+          assert(novel.getDouble(3) < -300.0,
+            "every novel char priced at the unk floor")
+        }),
+      RowLocal("WordPieceOps.wordPieceTokenizePieces",
+        // a doc in a script the fit never saw: whole words go [UNK], no drop
+        () => withNovel("щось нове"),
+        WordPieceOps.wordPieceTokenizePieces(_, id, text, wpVocab),
+        rs => {
+          val novel = byId(rs)(9999L)
+          assert(novel.getSeq[String](1) == Seq(WordPieceOps.Unk, WordPieceOps.Unk),
+            "novel-script words collapse to whole-word [UNK], never a drop")
+          assert(novel.getLong(3) == 2L)
+        }),
+      RowLocal("TextOps.gopherRepetition", () => textDocs,
+        TextOps.gopherRepetition(_, id, text)),
+      RowLocal("TextOps.gopherQuality", () => textDocs,
+        TextOps.gopherQuality(_, id, text)),
+      RowLocal("TextOps.normalizeText",
+        () => Seq((1L, "  A\tB  "), (2L, "ok"), (3L, "")).toDF("doc_id", "text"),
+        TextOps.normalizeText(_, id, text, keepText = true),
+        rs => assert(byId(rs)(1L).getAs[String]("norm_text") == "a b")),
+      RowLocal("WhitenOps.whiten", () => embeddings,
+        WhitenOps.whiten(_, col("vec_id"), col("embedding"), zca)),
+      RowLocal("TextOps.blocklistScreen", () => textDocs,
+        TextOps.blocklistScreen(_, id, text, blocklist)),
+      RowLocal("TextOps.blocklistRedact", () => textDocs,
+        TextOps.blocklistRedact(_, id, text, blocklist)),
+      RowLocal("UrlOps.canonicalize",
+        () => Seq(
+          (1L, "https://CDN.s.co.uk:443/p?utm_source=a&id=3#f", ts("2021-03-09 14:15:00")),
+          (2L, "HTTP://Example.com/a?b=1", ts("2021-03-09 14:15:01")))
+          .toDF("doc_id", "url", "event_time"),
+        UrlOps.canonicalize(_, id, col("url"), keep = Seq("event_time")),
+        rs => {
+          val r = byId(rs)(1L)
+          assert(r.getAs[String]("url_canon") == "https://cdn.s.co.uk/p?id=3")
+          assert(r.getAs[String]("domain") == "s.co.uk")
+          assert(r.getAs[Long]("n_params_dropped") == 1L)
+          assert(r.getAs[Timestamp]("event_time") == ts("2021-03-09 14:15:00"))
+        }),
+      RowLocal("MultimodalOps.imageDHash",
+        () => MultimodalOps.syntheticImageCorpus(mediaDocs, id, text)(spark).toDF(),
+        df => MultimodalOps.imageDHash(df.as[MediaRow])(spark).toDF(),
+        rs => {
+          val h = byId(rs, "media_id")
+          assert(!h(off).getBoolean(1), "truncated PNG must flag")
+          assert(h(8L).getBoolean(1) && h(off + 8L).getLong(2) == h(8L).getLong(2),
+            "decode -> re-encode twin hashes equal")
+        }),
+      RowLocal("MultimodalOps.audioEnvHash",
+        () => MultimodalOps.syntheticAudioCorpus(mediaDocs, id, text)(spark).toDF(),
+        df => MultimodalOps.audioEnvHash(df.as[MediaRow])(spark).toDF(),
+        rs => {
+          val h = byId(rs, "media_id")
+          assert(!h(off).getBoolean(1), "truncated WAV must flag")
+          for (i <- Seq(4L, 8L, 12L, 16L))
+            assert(h(i).getBoolean(1) && h(off + i).getLong(2) == h(i).getLong(2),
+              s"half-volume twin $i hashes equal")
+        }))
+  }
+
+  // Each row: the input as two MemoryStream micro-batches through the
+  // operator on the streaming frame must give exactly the batch rows.
+  rowLocalOps.zipWithIndex.foreach { case (r, i) =>
+    test(s"streams like batch: ${r.name}") {
+      val input = r.input()
+      val rows = input.collect()
+      val in = MemoryStream[Row](Encoders.row(input.schema), sqlCtx)
+      val q = r.op(in.toDF()).writeStream.outputMode("append")
+        .format("memory").queryName(s"rowlocal$i").start()
+      try {
+        val (b1, b2) = rows.splitAt(rows.length / 2)
+        in.addData(b1.toIndexedSeq); q.processAllAvailable()
+        in.addData(b2.toIndexedSeq); q.processAllAvailable()
+        // keyed by the whole row: a multiset, so duplicates must match too
+        def keyed(rs: Array[Row]) =
+          rs.groupBy(identity).view.mapValues(_.length).toMap
+        val streamed = spark.table(s"rowlocal$i").collect()
+        val batch = r.op(input).collect()
+        assert(batch.nonEmpty, "fixture sanity — the batch side emits rows")
+        assert(keyed(streamed) == keyed(batch),
+          s"streamed rows must equal batch rows; only streamed: " +
+            s"${streamed.diff(batch).take(3).toSeq}, only batch: " +
+            s"${batch.diff(streamed).take(3).toSeq}")
+        r.check(streamed)
+      } finally q.stop()
+    }
   }
 }
